@@ -96,14 +96,15 @@ def write_fleet_site(site: dict, table_dir: str, rng: np.random.Generator) -> No
         pq.write_table(table, os.path.join(part, "part-00000.parquet"))
 
 
-def gen_fleet(root: str, seed: int, sites: int, days: int) -> dict:
+FLEET_SITE = "site_00"
+
+
+def gen_fleet(root: str, seed: int, days: int) -> dict:
+    """One site's table, written under ``root/FLEET_SITE``."""
     rng = rng_for("qaqc_fleet", seed)
-    out = {}
-    for s in range(sites):
-        name = f"site_{s:02d}"
-        out[name] = fleet_site(rng, days)
-        write_fleet_site(out[name], os.path.join(root, name), rng)
-    return out
+    site = fleet_site(rng, days)
+    write_fleet_site(site, os.path.join(root, FLEET_SITE), rng)
+    return site
 
 
 # --- ingest_zarr_http ----------------------------------------------------------
@@ -183,49 +184,53 @@ def _upsert_table(t: np.ndarray, sensor: np.ndarray, value: np.ndarray, qc: np.n
     )
 
 
-def gen_upsert(
-    root: str, seed: int, sensors: int, base_minutes: int, batches: int,
-    arrivals_minutes: int, corrections: int,
-) -> dict:
-    """The table's initial rows (one sample per sensor per minute, ``t`` in
-    epoch seconds) plus ``batches`` merge batches, each the next
-    ``arrivals_minutes`` of samples and ``corrections`` late re-issues of
-    random older keys. Each piece is one parquet file."""
+def _upsert_block(rng: np.random.Generator, t0: int, sensors: int, m_lo: int, m_hi: int) -> dict:
+    """One sample per sensor per minute in [m_lo, m_hi)."""
+    m = np.repeat(np.arange(m_lo, m_hi, dtype=np.int64), sensors)
+    n = len(m)
+    return {
+        "t": t0 + m * 60,
+        "sensor": np.tile(np.arange(sensors, dtype=np.int32), m_hi - m_lo),
+        "value": rng.normal(20.0, 5.0, n),
+        "qc": rng.integers(0, 8, n, dtype=np.int32),
+    }
+
+
+UPSERT_T0 = 1_700_000_000 - 1_700_000_000 % 60
+
+
+def gen_upsert(root: str, seed: int, sensors: int, base_minutes: int) -> dict:
+    """The table's initial rows, one sample per sensor per minute (``t`` in
+    epoch seconds), as one parquet file. Merge batches come from
+    ``upsert_batch``, one at a time, so a run never runs out of them."""
     rng = rng_for("table_upsert_read", seed)
-    t0 = 1_700_000_000 - 1_700_000_000 % 60
-
-    def block(m_lo: int, m_hi: int) -> dict:
-        m = np.repeat(np.arange(m_lo, m_hi, dtype=np.int64), sensors)
-        n = len(m)
-        return {
-            "t": t0 + m * 60,
-            "sensor": np.tile(np.arange(sensors, dtype=np.int32), m_hi - m_lo),
-            "value": rng.normal(20.0, 5.0, n),
-            "qc": rng.integers(0, 8, n, dtype=np.int32),
-        }
-
     os.makedirs(root)
-    base = block(0, base_minutes)
+    base = _upsert_block(rng, UPSERT_T0, sensors, 0, base_minutes)
     pq.write_table(_upsert_table(**base), os.path.join(root, "base.parquet"))
-    out = {"t0": t0, "base": base, "batches": []}
-    end = base_minutes
-    for b in range(batches):
-        new = block(end, end + arrivals_minutes)
-        # late corrections: distinct older keys, strictly before the batch
-        keys = rng.choice(end * sensors, corrections, replace=False)
-        corr = {
-            "t": t0 + (keys // sensors) * 60,
-            "sensor": (keys % sensors).astype(np.int32),
-            "value": rng.normal(20.0, 5.0, corrections),
-            "qc": np.full(corrections, 9, np.int32),
-        }
-        batch = {k: np.concatenate([new[k], corr[k]]) for k in new}
-        path = os.path.join(root, f"batch-{b:03d}.parquet")
-        pq.write_table(_upsert_table(**batch), path)
-        out["batches"].append(batch)
-        end += arrivals_minutes
-    out["end_minute"] = end
-    return out
+    return {"t0": UPSERT_T0, "base": base}
+
+
+def upsert_batch(
+    path: str, seed: int, b: int, sensors: int, base_minutes: int, arrivals_minutes: int,
+    corrections: int,
+) -> dict:
+    """Merge batch ``b``, from its own stream of the seed: the next
+    ``arrivals_minutes`` of samples after batch ``b - 1`` plus
+    ``corrections`` late corrections to distinct older keys. Written as one
+    parquet file at ``path``."""
+    rng = np.random.default_rng([_SALT["table_upsert_read"], int(seed), 1 + b])
+    end = base_minutes + b * arrivals_minutes
+    new = _upsert_block(rng, UPSERT_T0, sensors, end, end + arrivals_minutes)
+    keys = rng.choice(end * sensors, corrections, replace=False)
+    corr = {
+        "t": UPSERT_T0 + (keys // sensors) * 60,
+        "sensor": (keys % sensors).astype(np.int32),
+        "value": rng.normal(20.0, 5.0, corrections),
+        "qc": np.full(corrections, 9, np.int32),
+    }
+    batch = {k: np.concatenate([new[k], corr[k]]) for k in new}
+    pq.write_table(_upsert_table(**batch), path)
+    return batch
 
 
 # --- corpus_neardup ----------------------------------------------------------

@@ -92,7 +92,7 @@ class Tracer:
                 out[s["name"]] = out.get(s["name"], 0.0) + (s["end"] - s["start"]) - child[s["id"]]
         return out
 
-    def wrap(self, module, attr: str, span_name: str, on_result=None):
+    def wrap(self, module, attr: str, span_name: str):
         """Replace ``module.attr`` with a wrapper that records a span around
         each call; returns a function that restores the original."""
         original = getattr(module, attr)
@@ -100,12 +100,7 @@ class Tracer:
 
         def wrapper(*args, **kwargs):
             with tracer.span(span_name):
-                result = original(*args, **kwargs)
-            if on_result is not None:
-                b0 = time.perf_counter()
-                on_result(result)
-                tracer.bookkeeping_s += time.perf_counter() - b0
-            return result
+                return original(*args, **kwargs)
 
         setattr(module, attr, wrapper)
         return lambda: setattr(module, attr, original)
@@ -127,18 +122,17 @@ PHASE_PROPERTY = "perfbench.phase"
 PYTHON_SENT = "data sent to Python workers"
 
 
-def parse_event_log(path: str, phase: str) -> dict[str, float]:
-    """Sum task metrics over the jobs tagged ``perfbench.phase == phase``.
+COUNTERS = ("tasks", "executor_run_s", "gc_s", "shuffle_write_bytes", "input_bytes",
+            "input_records", "python_bytes_sent")
 
-    Returns tasks, executor run time (s), JVM GC time (s), shuffle bytes
-    written, input bytes and records read, and bytes sent to Python
-    workers."""
+
+def parse_event_log(path: str) -> dict[str, dict[str, float]]:
+    """Task metrics summed per value of the job property
+    ``perfbench.phase``: tasks, executor run time (s), JVM GC time (s),
+    shuffle bytes written, input bytes and records read, and bytes sent to
+    Python workers."""
     stage_phase: dict[int, str] = {}
-    out = dict.fromkeys(
-        ("tasks", "executor_run_s", "gc_s", "shuffle_write_bytes", "input_bytes",
-         "input_records", "python_bytes_sent"),
-        0.0,
-    )
+    out: dict[str, dict[str, float]] = {}
     with open(path) as f:
         for line in f:
             ev = json.loads(line)
@@ -148,22 +142,34 @@ def parse_event_log(path: str, phase: str) -> dict[str, float]:
                 for sid in ev.get("Stage IDs", []):
                     stage_phase[sid] = tag
             elif kind == "SparkListenerTaskEnd":
-                if stage_phase.get(ev.get("Stage ID")) != phase:
+                tag = stage_phase.get(ev.get("Stage ID"))
+                if tag is None:
                     continue
+                c = out.setdefault(tag, dict.fromkeys(COUNTERS, 0.0))
                 m = ev.get("Task Metrics") or {}
-                out["tasks"] += 1
-                out["executor_run_s"] += m.get("Executor Run Time", 0) / 1000.0
-                out["gc_s"] += m.get("JVM GC Time", 0) / 1000.0
-                out["shuffle_write_bytes"] += (m.get("Shuffle Write Metrics") or {}).get(
+                c["tasks"] += 1
+                c["executor_run_s"] += m.get("Executor Run Time", 0) / 1000.0
+                c["gc_s"] += m.get("JVM GC Time", 0) / 1000.0
+                c["shuffle_write_bytes"] += (m.get("Shuffle Write Metrics") or {}).get(
                     "Shuffle Bytes Written", 0
                 )
                 inp = m.get("Input Metrics") or {}
-                out["input_bytes"] += inp.get("Bytes Read", 0)
-                out["input_records"] += inp.get("Records Read", 0)
+                c["input_bytes"] += inp.get("Bytes Read", 0)
+                c["input_records"] += inp.get("Records Read", 0)
                 for acc in (ev.get("Task Info") or {}).get("Accumulables", []):
                     if acc.get("Name") == PYTHON_SENT:
-                        out["python_bytes_sent"] += float(acc.get("Update") or 0)
+                        c["python_bytes_sent"] += float(acc.get("Update") or 0)
     return out
+
+
+def phase_total(by_phase: dict[str, dict[str, float]], phase: str) -> dict[str, float]:
+    """Counters summed over ``phase`` and its sub-phases (``phase/<part>``)."""
+    total = dict.fromkeys(COUNTERS, 0.0)
+    for tag, c in by_phase.items():
+        if tag == phase or tag.startswith(phase + "/"):
+            for k in COUNTERS:
+                total[k] += c[k]
+    return total
 
 
 def find_event_log(log_dir: str) -> str:

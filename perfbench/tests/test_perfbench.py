@@ -46,10 +46,13 @@ def test_highest_supported_level_needs_ten_beyond():
 # --- generator determinism ----------------------------------------------------------
 
 GENERATORS = {
-    "fleet": lambda root, seed: gen.gen_fleet(root, seed, sites=1, days=3),
+    "fleet": lambda root, seed: gen.gen_fleet(root, seed, days=3),
     "zarr": lambda root, seed: gen.gen_zarr(root, seed, instruments=1, rows=1000, chunk=300, width=4),
-    "upsert": lambda root, seed: gen.gen_upsert(root, seed, sensors=2, base_minutes=60, batches=2,
-                                                arrivals_minutes=5, corrections=3),
+    "upsert": lambda root, seed: [
+        gen.gen_upsert(root, seed, sensors=2, base_minutes=60),
+        *(gen.upsert_batch(os.path.join(root, f"batch-{b}.parquet"), seed, b, sensors=2,
+                           base_minutes=60, arrivals_minutes=5, corrections=3) for b in range(2)),
+    ],
     "corpus": lambda root, seed: gen.gen_corpus(root, seed, docs=20, words=30, clusters=3, dim=4,
                                                 queries=2),
 }
@@ -96,7 +99,10 @@ def _event_log(path):
         {"Event": "SparkListenerJobStart", "Job ID": 0, "Stage IDs": [0, 1],
          "Properties": {"perfbench.phase": "setup"}},
         {"Event": "SparkListenerJobStart", "Job ID": 1, "Stage IDs": [2],
-         "Properties": {"perfbench.phase": "loop"}},
+         "Properties": {"perfbench.phase": "loop/a"}},
+        {"Event": "SparkListenerJobStart", "Job ID": 2, "Stage IDs": [3],
+         "Properties": {"perfbench.phase": "loop/b"}},
+        {"Event": "SparkListenerTaskEnd", "Stage ID": 3, "Task Metrics": {"Executor Run Time": 10}},
         {"Event": "SparkListenerTaskEnd", "Stage ID": 0,
          "Task Metrics": {"Executor Run Time": 5000, "JVM GC Time": 100}},
         {"Event": "SparkListenerTaskEnd", "Stage ID": 2,
@@ -115,15 +121,17 @@ def _event_log(path):
             f.write(json.dumps(e) + "\n")
 
 
-def test_parse_event_log_sums_only_the_phase(tmp_path):
+def test_parse_event_log_sums_per_phase(tmp_path):
     p = tmp_path / "app-1"
     _event_log(p)
-    ev = harness.parse_event_log(str(p), "loop")
-    assert ev == {
+    by_phase = harness.parse_event_log(str(p))
+    assert by_phase["loop/a"] == {
         "tasks": 2, "executor_run_s": 2.0, "gc_s": 0.02, "shuffle_write_bytes": 64,
         "input_bytes": 1024, "input_records": 12, "python_bytes_sent": 300,
     }
-    assert harness.parse_event_log(str(p), "setup")["executor_run_s"] == 5.0
+    assert by_phase["setup"]["executor_run_s"] == 5.0
+    assert harness.phase_total(by_phase, "loop")["tasks"] == 3
+    assert harness.phase_total(by_phase, "loo")["tasks"] == 0
     assert harness.find_event_log(str(tmp_path)) == str(p)
 
 
@@ -156,9 +164,8 @@ def test_tracer_wrap_restores():
             return x + 1
 
     t = harness.Tracer(enabled=True)
-    seen = []
-    restore = t.wrap(M, "f", "m.f", seen.append)
-    assert M.f(1) == 2 and seen == [2] and [s["name"] for s in t.spans] == ["m.f"]
+    restore = t.wrap(M, "f", "m.f")
+    assert M.f(1) == 2 and [s["name"] for s in t.spans] == ["m.f"]
     restore()
     M.f(1)
     assert len(t.spans) == 1
@@ -223,3 +230,49 @@ def test_objstore_counts_and_keeps_alive(tmp_path):
         proc.stdin.close()
         proc.stdout.close()
     assert proc.returncode is not None
+
+
+# --- workload plumbing --------------------------------------------------------------------
+
+
+def test_mix_interleaves_parts_over_their_own_inputs():
+    import run
+    import workloads
+
+    class Part(workloads.Workload):
+        def __init__(self, name, kinds):
+            self.name, self.kinds = name, kinds
+
+        def start(self, ctx):
+            self.seen = (ctx.inputs, ctx.refs)
+
+        def cycle(self, ctx):
+            return [(k, lambda k=k: k) for k in self.kinds]
+
+    mix = workloads.Mix()
+    mix.parts = [Part("a", ["a1", "a2", "a3"]), Part("b", ["b1"])]
+    ctx = run.Context(inputs="in", refs={"a": 1, "b": 2}, trace=False)
+    mix.start(ctx)
+    assert [p.seen for p in mix.parts] == [(os.path.join("in", "a"), 1), (os.path.join("in", "b"), 2)]
+    assert mix.ctx["a"].counts is ctx.counts
+    assert [kind for kind, _fn in mix.cycle(ctx)] == ["a1", "b1", "a2", "a3"]
+
+
+def test_read_version_subtracts_deletion_vectors(tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import workloads
+
+    def rows(ts):
+        n = len(ts)
+        return pa.table({"t": pa.array(ts, pa.int64()), "sensor": pa.array([0] * n, pa.int32()),
+                         "value": pa.array([1.0] * n), "qc": pa.array([0] * n, pa.int32())})
+
+    pq.write_table(rows([1, 2, 3]), tmp_path / "part-0.parquet")
+    pq.write_table(rows([4, 5]), tmp_path / "part-1.parquet")
+    (tmp_path / "_deletes").mkdir()
+    pq.write_table(pa.table({"f": ["part-0.parquet", "part-1.parquet", "part-0.parquet"],
+                             "pos": pa.array([0, 1, 2], pa.int64())}),
+                   tmp_path / "_deletes" / "part-0.parquet")
+    assert sorted(workloads._read_version(str(tmp_path)).column("t").to_pylist()) == [2, 4]
