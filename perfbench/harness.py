@@ -46,6 +46,13 @@ def vm_hwm_mb(pid: "int | str" = "self") -> float:
     raise RuntimeError(f"no VmHWM for pid {pid}")
 
 
+def cpu_s(pid: "int | str" = "self") -> float:
+    """User plus system CPU time of a process, from /proc/<pid>/stat."""
+    with open(f"/proc/{pid}/stat") as f:
+        fields = f.read().rsplit(")", 1)[1].split()
+    return (int(fields[11]) + int(fields[12])) / os.sysconf("SC_CLK_TCK")
+
+
 class Tracer:
     """In-memory spans (name, start, end, parent), written out once at the
     end. Disabled tracers cost one attribute check."""

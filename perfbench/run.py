@@ -21,7 +21,6 @@ import json
 import os
 import shutil
 import signal
-import statistics
 import subprocess
 import sys
 import time
@@ -34,18 +33,11 @@ sys.path.insert(0, HERE)
 import gen  # noqa: E402
 import harness  # noqa: E402
 
-GEN_REPEATS = 2
-# percentile reported as op_tail_s, fixed so that runs of different lengths
-# report the same statistic. p90 of an upsert_read_zarr_http run lands on one
-# or two of its three to five merges, whose latency still falls through the
-# run; p75 lands among its slices and spreads less from seed to seed.
-TAIL_LEVEL = 75
 
 END_TO_END = {
     "setup_s": "s",
     "peak_rss_mb": "MB",
     "op_p50_s": "s",
-    "op_tail_s": "s",
     "ops_per_s": "1/s",
 }
 
@@ -139,6 +131,14 @@ def stop_session(spark) -> None:
         proc.wait()
 
 
+def jvm_gc_jit_s(spark) -> tuple[float, float]:
+    """Time the driver JVM has spent so far in garbage collection and in
+    JIT compilation."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    gc_ms = sum(b.getCollectionTime() for b in mf.getGarbageCollectorMXBeans())
+    return gc_ms / 1000.0, mf.getCompilationMXBean().getTotalCompilationTime() / 1000.0
+
+
 class Context:
     """What a workload's operations see: the session, tracer, work
     directory, generated inputs and their reference arrays, and the counts
@@ -218,21 +218,14 @@ def main(argv=None) -> int:
         pin_environment(work, cpus, heap_mb, event_dir)
         sys.path.insert(0, ROOT)
 
-        # set-up: generation (repeated; identical hashes prove determinism),
-        # session start, workload start (fixtures, staging, warm-up)
-        gen_s, hashes = [], []
-        for i in range(GEN_REPEATS):
-            inputs = os.path.join(work, f"inputs-{i}")
-            t0 = time.perf_counter()
-            refs = wl.generate(inputs, args.seed)
-            gen_s.append(time.perf_counter() - t0)
-            hashes.append(gen.tree_sha256(inputs))
-        if len(set(hashes)) != 1:
-            print("perfbench: generator is not deterministic for this seed", file=sys.stderr)
-            return 1
-        for i in range(1, GEN_REPEATS):
-            shutil.rmtree(os.path.join(work, f"inputs-{i}"))
-        inputs = os.path.join(work, "inputs-0")
+        # set-up: generation, session start, workload start (fixtures,
+        # staging, warm-up). The unit tests prove that a seed gives
+        # byte-identical inputs; the hash goes to the detail line.
+        inputs = os.path.join(work, "inputs")
+        t0 = time.perf_counter()
+        refs = wl.generate(inputs, args.seed)
+        gen_s = time.perf_counter() - t0
+        inputs_sha256 = gen.tree_sha256(inputs)
 
         t0 = time.perf_counter()
         from rca_data_tools_spark.session import get_spark
@@ -246,7 +239,7 @@ def main(argv=None) -> int:
         t0 = time.perf_counter()
         wl.start(ctx)
         start_s = time.perf_counter() - t0
-        setup_s = statistics.median(gen_s) + session_s + start_s
+        setup_s = gen_s + session_s + start_s
 
         # start the loop from a collected heap on both sides of the gateway
         gc.collect()
@@ -258,15 +251,21 @@ def main(argv=None) -> int:
         tracer.enabled = bool(args.trace)
         ctx.counts.clear()
         wl.loop_started(ctx)
-        t_loop = time.perf_counter()
         # VmHWM after each cycle. peak_rss_mb is the reading after the
         # first cycle, the same work in every run: the JVM's heap keeps
         # growing with the cycles run, and a faster program runs more
         jvm = spark.sparkContext._gateway.proc.pid
         rss_by_cycle = []
+        cpu0, gc_jit0 = (harness.cpu_s(), harness.cpu_s(jvm)), jvm_gc_jit_s(spark)
+        t_loop = time.perf_counter()
         records = run_loop(ctx, wl, args.seconds,
                            lambda: rss_by_cycle.append((harness.vm_hwm_mb(), harness.vm_hwm_mb(jvm))))
         loop_s = time.perf_counter() - t_loop
+        # CPU time of the loop, and how much of the JVM's went to garbage
+        # collection and JIT compilation
+        gc_jit1 = jvm_gc_jit_s(spark)
+        loop_cpu = {"driver": harness.cpu_s() - cpu0[0], "jvm": harness.cpu_s(jvm) - cpu0[1],
+                    "jvm_gc": gc_jit1[0] - gc_jit0[0], "jvm_jit": gc_jit1[1] - gc_jit0[1]}
         wl.loop_finished(ctx)
         for r in restore:
             r()
@@ -282,13 +281,12 @@ def main(argv=None) -> int:
             "seed": args.seed,
             "cpus": cpus,
             "driver_heap_mb": heap_mb,
-            "inputs_sha256": hashes[0],
+            "inputs_sha256": inputs_sha256,
             "ops": attempted,
             "loop_s": loop_s,
-            "tail_level": TAIL_LEVEL,
-            "tail_samples_beyond": attempted * (100 - TAIL_LEVEL) / 100.0,
+            "loop_cpu_s": loop_cpu,
             "highest_supported_level": harness.highest_supported_level(attempted),
-            "setup_parts_s": {"generate_median": statistics.median(gen_s), "session": session_s,
+            "setup_parts_s": {"generate": gen_s, "session": session_s,
                               "start": start_s, **{f"start.{k}": v for k, v in wl.start_s.items()}},
             "latencies_s": [[r[0], round(r[1], 4)] for r in records],
             "per_kind": {k: per_kind(v, WORK_UNITS[k]) for k, v in by_kind.items()},
@@ -306,7 +304,6 @@ def main(argv=None) -> int:
                 "setup_s": setup_s,
                 "peak_rss_mb": sum(rss_by_cycle[0]),
                 "op_p50_s": harness.percentile(lat, 50),
-                "op_tail_s": harness.percentile(lat, TAIL_LEVEL),
                 "ops_per_s": attempted / sum(lat),
             }
         stop_session(spark)

@@ -43,6 +43,16 @@ def test_highest_supported_level_needs_ten_beyond():
     assert harness.highest_supported_level(1000) == 99
 
 
+# --- process accounting ---------------------------------------------------------------
+
+
+def test_cpu_s_counts_this_process():
+    t0 = harness.cpu_s()
+    while harness.cpu_s() - t0 < 0.05:
+        sum(i * i for i in range(10_000))
+    assert harness.cpu_s() > t0
+
+
 # --- generator determinism ----------------------------------------------------------
 
 GENERATORS = {

@@ -719,9 +719,11 @@ class Storage(Mix):
 
     name = "upsert_read_zarr_http"
     PARTS = (TableUpsertRead, ZarrHttp)
-    # merge, slice and read latencies fall steeply over the first cycles
-    # after the session starts, and merges keep falling slowly after that
-    WARM_CYCLES = 2
+    # while the JVM compiles the hot paths, merge, slice and read latencies
+    # fall steeply over the first cycles after the session starts, then
+    # slowly: in a 60 s loop after two warm-up cycles, JIT compilation took
+    # 3.5 s per cycle at first and 1-1.5 s from the tenth cycle on
+    WARM_CYCLES = 6
 
 
 #: work unit of each operation kind, for the per-kind throughput in the
