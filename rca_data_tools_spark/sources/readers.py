@@ -12,13 +12,43 @@ At 100 TB the fact tables are expected to be laid out as
 runtime has the jars); ``load_table`` works identically on a single file or a
 partitioned directory — time predicates then prune partitions, not just row
 groups.
+
+Resolution registry. Resolving a table — partition discovery over its
+``date=`` directories (one Spark job once a listing exceeds 32 paths) plus
+parquet schema inference (a second job) — costs more than the rest of a
+short-window job. The reference refreshes each instrument once per span, so
+one session reads the same table several times in a row. ``load_table``
+therefore resolves each table once per session and reuses that resolution:
+the base relation (file index, partition spec, schema) and the list of
+nanos columns, keyed by (session object, absolute path). Another session,
+including ``spark.newSession()``, never sees it. Only local tables take part:
+a URI (``file://``, ``s3a://``, ``hdfs://``) cannot be listed with
+``os.scandir``, so Spark resolves it on every call.
+
+Freshness rule: every call re-lists the table with ``os.scandir`` (4 ms for
+400 files on a local disk) and reuses the resolution only when every file's
+(relative path, size, mtime) and the session's whole SQL conf match what they
+were when it was resolved; otherwise it resolves again. A resolution taken
+while some file was younger than ``RACY_WINDOW_S`` is never reused (git's
+racy-clean rule): on a filesystem with coarse timestamps a same-size rewrite
+within that window could keep the old mtime. So a call
+returns exactly what a fresh ``spark.read`` would return at call time. Window
+filters, the UTC check and the nanos/NTZ casts are applied per call; Spark
+still prunes partitions against the reused index at physical planning. What
+gains is repeated reads of an unchanged table in one session: they launch no
+Spark job before the query's own.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+import time
+import weakref
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampNTZType
 
 # Canonical table set of the driver's synthetic corpus (TESTDATA.md).
 TABLES = (
@@ -34,19 +64,84 @@ TABLES = (
     "embeddings",
 )
 
+# A resolution taken while a file's mtime was this close to the listing time
+# is not reused; 2 s covers the coarsest common filesystem clock (FAT).
+RACY_WINDOW_S = 2.0
 
-def _nanos_timestamp_cols(path: str) -> list[str]:
+
+@dataclass(frozen=True)
+class _Resolution:
+    listing: tuple[tuple[str, int, int], ...]
+    confs: object  # JVM immutable Map: the session's SQL conf settings
+    relation: object  # JVM HadoopFsRelation: file index + schema
+    schema: StructType
+    nanos: tuple[str, ...]
+
+
+_registry: "weakref.WeakKeyDictionary[SparkSession, dict[str, _Resolution]]" = (
+    weakref.WeakKeyDictionary()
+)
+_registry_lock = threading.Lock()
+
+
+def _hidden(name: str) -> bool:
+    """Spark's rule for names its file index skips (``_SUCCESS``, ``.crc``,
+    in-flight copies); ``_``-prefixed partition directories still count."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _listing(path: str) -> tuple[tuple[str, int, int], ...]:
+    """(relative path, size, mtime_ns) of every file under ``path`` (or of
+    ``path`` itself when it is a file), sorted: the table's fingerprint."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+    out = []
+    stack = [""]
+    while stack:
+        rel = stack.pop()
+        try:
+            entries = list(os.scandir(os.path.join(path, rel)))
+        except FileNotFoundError:
+            continue
+        for e in entries:
+            r = os.path.join(rel, e.name)
+            if e.is_dir():
+                stack.append(r)
+                continue
+            try:
+                st = e.stat()
+            except FileNotFoundError:  # removed since the scan
+                continue
+            out.append((r, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def _first_data_file(path: str, listing) -> str | None:
+    """The first file Spark would read: on a partitioned layout it sits
+    under the partition directories."""
+    if os.path.isfile(path):
+        return path
+    for rel, _size, _mtime in listing:
+        if not any(_hidden(part) for part in rel.split(os.sep)):
+            return os.path.join(path, rel)
+    return None
+
+
+def _nanos_timestamp_cols(data_file: str | None) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS), which Spark's vectorized
-    reader rejects. Detected from the footer (cheap, metadata-only)."""
+    reader rejects. Detected from one data file's footer (cheap,
+    metadata-only)."""
+    if data_file is None:
+        return []
     try:
-        import glob
-
         import pyarrow.parquet as pq
 
-        f = path if os.path.isfile(path) else next(iter(sorted(glob.glob(os.path.join(path, "*.parquet")))), None)
-        if f is None:
-            return []
-        pf = pq.ParquetFile(f)
+        pf = pq.ParquetFile(data_file)
         # Arrow reports BOTH real TIMESTAMP(NANOS) columns and legacy INT96
         # timestamps (Spark's own default parquet output) as timestamp[ns].
         # Only the INT64-backed NANOS kind trips Spark's vectorized reader —
@@ -62,6 +157,48 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
         return []
 
 
+def _session_confs(spark: SparkSession):
+    return spark._jsparkSession.sessionState().conf().getAllConfs()
+
+
+def _resolve(spark: SparkSession, path: str) -> tuple[DataFrame, _Resolution]:
+    """The session's resolution of the local table ``path``: reused when the
+    table's files and the session's conf are unchanged, else taken afresh."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    listed_ns = time.time_ns()
+    listing = _listing(path)
+    with _registry_lock:
+        tables = _registry.setdefault(spark, {})
+        hit = tables.get(path)
+    if hit is not None and hit.listing == listing:
+        if hit.nanos:
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # compared in the JVM: the conf is never copied to Python
+        if hit.confs.equals(_session_confs(spark)):
+            # a new LogicalRelation over the same relation: fresh attribute
+            # ids, so two frames of one table self-join like two reads
+            jdf = spark._jsparkSession.baseRelationToDataFrame(hit.relation)
+            return ClassicDataFrame(jdf, spark), hit
+
+    nanos = tuple(_nanos_timestamp_cols(_first_data_file(path, listing)))
+    if nanos:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    confs = _session_confs(spark)
+    df = spark.read.parquet(path)
+    res = _Resolution(
+        listing, confs, df._jdf.queryExecution().analyzed().relation(), df.schema, nanos
+    )
+    cutoff = listed_ns - int(RACY_WINDOW_S * 1e9)
+    racy = any(mtime >= cutoff for _r, _s, mtime in listing)
+    with _registry_lock:
+        if racy:
+            tables.pop(path, None)
+        else:
+            tables[path] = res
+    return df, res
+
+
 def load_table(
     spark: SparkSession,
     sf_dir: str,
@@ -73,6 +210,8 @@ def load_table(
 
     Accepts either ``<sf_dir>/<name>.parquet`` (single file, the test corpus)
     or ``<sf_dir>/<name>/`` (partitioned directory, the at-scale layout).
+    The table is resolved once per session and re-resolved whenever its
+    files change (see the module docstring).
 
     Nanosecond-precision timestamp columns (which Spark cannot scan natively)
     are read as epoch-nanos longs via the legacy conf and rebuilt as
@@ -90,7 +229,6 @@ def load_table(
     the filter is applied directly and pushes down as-is.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import TimestampNTZType
 
     # The NTZ->TIMESTAMP normalization below is instant-preserving only under
     # a UTC session; a reused non-UTC session would silently shift values.
@@ -104,16 +242,19 @@ def load_table(
     file_path = os.path.join(sf_dir, f"{name}.parquet")
     dir_path = os.path.join(sf_dir, name)
     path = file_path if os.path.exists(file_path) else dir_path
-    nanos = _nanos_timestamp_cols(path)
-    if nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    if "://" not in path and os.path.exists(path):
+        df, res = _resolve(spark, os.path.abspath(path))
+        schema, nanos = res.schema, res.nanos
+    else:
+        # a URI (or a missing path, which Spark reports): Spark lists it
+        df = spark.read.parquet(path)
+        schema, nanos = df.schema, ()
     # timestamp[us] parquet columns without a timezone arrive as
     # TIMESTAMP_NTZ; the engine's time functions (unix_millis, window, ...)
     # expect TIMESTAMP. With the session timezone pinned to UTC the cast is a
     # wall-clock no-op, so normalize here — but only after the raw-column
     # filters below, which must sit under the Project to reach the scan.
-    ntz = [f.name for f in df.schema.fields if isinstance(f.dataType, TimestampNTZType)]
+    ntz = [f.name for f in schema.fields if isinstance(f.dataType, TimestampNTZType)]
 
     # On the at-scale layout (<table>/date=YYYY-MM-DD/...) a timestamp
     # predicate alone prunes row groups but NOT partitions — Spark cannot
@@ -122,14 +263,18 @@ def load_table(
     # column: deriving the partition predicate from a filter on some other
     # timestamp column (e.g. an ingest-time column on a table partitioned by
     # observation time) would silently over-prune partitions and drop rows.
-    has_date_partition = "date" in df.columns
+    has_date_partition = "date" in schema.names
 
     for col, (lo, hi) in (time_filters or {}).items():
         if has_date_partition and col == partition_time_col and col != "date":
             if lo is not None:
                 df = df.filter(F.col("date") >= F.to_date(F.lit(lo).cast("timestamp")))
             if hi is not None:
-                df = df.filter(F.col("date") <= F.to_date(F.lit(hi).cast("timestamp")))
+                # the window is half-open: a midnight `hi` must not keep the
+                # partition that starts at it, so bound by the last instant
+                # inside the window
+                last = F.lit(hi).cast("timestamp") - F.expr("INTERVAL 1 MICROSECOND")
+                df = df.filter(F.col("date") <= F.to_date(last))
         if col in nanos:
             # Foldable expression: constant-folds to a long literal before
             # predicate pushdown, matching Spark's own literal→timestamp

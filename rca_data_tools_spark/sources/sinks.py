@@ -29,14 +29,16 @@ def write_partitioned(
     """Overwrite-partition write: only the partitions present in ``df`` are
     replaced (dynamic partition overwrite), the at-scale equivalent of the
     reference's regenerate-one-window refresh."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    if dynamic:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).format(fmt).save(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    mode = "dynamic" if dynamic else "static"
+    # a writer option, not the session conf: jobs sharing a session must not
+    # see each other's overwrite mode
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", mode)
+        .partitionBy(*partition_cols)
+        .format(fmt)
+        .save(path)
+    )
 
 
 def stale_outputs(existing: DataFrame, produced: DataFrame, key_col: str = "key") -> DataFrame:

@@ -1125,3 +1125,21 @@ def test_footer_stats_string_zone_key_matches_scan(spark, tmp_path):
     # the zone-stats entry point takes the footer path (no Spark job needed)
     stats, used = _zone_file_stats(spark, d, "d", "d string, event_type string, n long")
     assert stats == scan and used is False
+
+
+def test_dynamic_overwrite_leaves_session_conf_alone(spark, tmp_path, monkeypatch):
+    """Jobs that share a session must not race on its overwrite mode: the
+    dynamic mode rides on the writer, the session conf is never set."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    sets = []
+    real_set = RuntimeConfig.set
+    monkeypatch.setattr(RuntimeConfig, "set", lambda self, k, v: (sets.append(k), real_set(self, k, v)))
+    out = str(tmp_path / "part_out")
+    write_partitioned(spark.createDataFrame([(1, "a"), (2, "b")], "id int, site string"), out, ["site"])
+    write_partitioned(spark.createDataFrame([(3, "a")], "id int, site string"), out, ["site"])
+    assert key not in sets
+    assert spark.conf.get(key) == before
+    assert {(r.site, r.id) for r in spark.read.parquet(out).collect()} == {("a", 3), ("b", 2)}
