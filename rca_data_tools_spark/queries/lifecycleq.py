@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from rca_data_tools_spark.queries._registry import query
 from rca_data_tools_spark.sources.readers import load_table, read_csv
-from rca_data_tools_spark.sources.sinks import manifest_zone_max
+from rca_data_tools_spark.sources.zonemap import manifest_zone_max
 from rca_data_tools_spark.functions.localrel import local_rows_df
 
 _CUTOFF = "2024-01-16"
@@ -2648,7 +2648,7 @@ def sink_merge_prune_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     opens, zero data scans — composed with the same candidate-exactness
     fallbacks as the 1-D path; the secondary maps ride the same single
     stats scan every merge already pays for its new parts
-    (sinks._read_manifest / _extend_manifest / manifest_candidate_files)."""
+    (zonemap.checked_maps / build_manifest / manifest_candidate_files)."""
     from rca_data_tools_spark.functions.numeric import dsum
     from rca_data_tools_spark.sources.bloom_index import point_lookup
     from rca_data_tools_spark.sources.sinks import (
@@ -3016,7 +3016,7 @@ def sink_range_scan_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the candidate list costs one manifest read (no footer
     opens), the scan is O(candidate files), the DV subtraction is the
     standard unhinted anti-join (sinks.range_scan /
-    manifest_range_files)."""
+    zonemap.prune_files)."""
     from rca_data_tools_spark.functions.numeric import dsum
     from rca_data_tools_spark.sources.sinks import (
         create_table, delete_into_table, latest_committed, optimize_table,
@@ -3129,7 +3129,7 @@ def sink_merge_full_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="rca_mergefull_")
     create_table(e, root, zone_key="event_id", n_files=8)
     # MAX(event_id) from the manifest the create just wrote — zero Spark
-    # jobs (sinks.manifest_zone_max; exact integer footer stats). Fallback
+    # jobs (zonemap.manifest_zone_max; exact integer footer stats). Fallback
     # aggregate keeps the empty-corpus contract: MAX of zero rows is NULL
     # -> m=0 keeps every derived filter well-typed (and matching the
     # oracle, whose joins/filters are all vacuous on empty tables)
@@ -3225,7 +3225,7 @@ def sink_kv_chain_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.create(e, zone_key="event_id", n_files=8)
 
     # MAX(event_id) from the manifest the create just wrote — zero Spark
-    # jobs (sinks.manifest_zone_max; exact integer footer stats). Fallback
+    # jobs (zonemap.manifest_zone_max; exact integer footer stats). Fallback
     # aggregate keeps the empty-corpus contract: MAX of zero rows is NULL
     # -> m=0 keeps every derived filter well-typed (and matching the
     # oracle, whose joins/filters are all vacuous on empty tables)
@@ -3342,7 +3342,7 @@ def sink_merge_full_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="rca_mfcdf_")
     create_table(e, root, zone_key="event_id", n_files=8)
     # MAX(event_id) from the manifest the create just wrote — zero Spark
-    # jobs (sinks.manifest_zone_max; exact integer footer stats). Fallback
+    # jobs (zonemap.manifest_zone_max; exact integer footer stats). Fallback
     # aggregate keeps the empty-corpus contract: MAX of zero rows is NULL
     # -> m=0 keeps every derived filter well-typed (and matching the
     # oracle, whose joins/filters are all vacuous on empty tables)
@@ -3516,7 +3516,7 @@ def sink_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="rca_colmap_")
     create_table(e, root, zone_key="event_id", n_files=8)
     # MAX(event_id) from the manifest the create just wrote — zero Spark
-    # jobs (sinks.manifest_zone_max; exact integer footer stats). Fallback
+    # jobs (zonemap.manifest_zone_max; exact integer footer stats). Fallback
     # aggregate keeps the empty-corpus contract: MAX of zero rows is NULL
     # -> m=0 keeps every derived filter well-typed (and matching the
     # oracle, whose joins/filters are all vacuous on empty tables)
@@ -3621,7 +3621,7 @@ def sink_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="rca_dropcol_")
     create_table(e, root, zone_key="event_id", n_files=8)
     # MAX(event_id) from the manifest the create just wrote — zero Spark
-    # jobs (sinks.manifest_zone_max; exact integer footer stats). Fallback
+    # jobs (zonemap.manifest_zone_max; exact integer footer stats). Fallback
     # aggregate keeps the empty-corpus contract: MAX of zero rows is NULL
     # -> m=0 keeps every derived filter well-typed (and matching the
     # oracle, whose joins/filters are all vacuous on empty tables)

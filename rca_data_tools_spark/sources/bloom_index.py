@@ -1,7 +1,7 @@
 """Per-FILE Bloom index: file-skipping for point lookups on keys the layout
 is not sorted by.
 
-Zone maps (sinks.MANIFEST_NAME) prune range predicates on the clustering
+Zone maps (zonemap.MANIFEST_NAME) prune range predicates on the clustering
 key; a point lookup on any OTHER high-cardinality column (fetch these
 event_ids / user_ids / doc_ids out of 100 TB) still opens every file. The
 standard format answer (parquet's own bloom_filter footers, Delta's bloom
@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rca_data_tools_spark.functions.bloom import BLOOM_SEEDS
+from rca_data_tools_spark.sources import zonemap
 from rca_data_tools_spark.sources.sinks import (
     BLOOM_NAME,
     read_deletion_vectors,
@@ -253,10 +254,8 @@ def point_lookup(
     item 5), and subtracting the version's deletion vectors (a lookup
     composes with merge-on-read deletes).
     Returns (rows, {"files_total", "files_scanned"})."""
-    from rca_data_tools_spark.sources.sinks import manifest_candidate_files
-
     cands, total = bloom_candidate_files(spark, table_dir, key_col, values)
-    zcands = manifest_candidate_files(table_dir, key_col, values)
+    zcands = zonemap.manifest_candidate_files(table_dir, key_col, values)
     if zcands is not None:
         keep = set(zcands)
         cands = [f for f in cands if f in keep]

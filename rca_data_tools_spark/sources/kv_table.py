@@ -45,6 +45,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rca_data_tools_spark.sources import zonemap
 from rca_data_tools_spark.sources.commit_store import advance
 
 # namespaced pointer prefixes for sidecar entries (data files are bare names)
@@ -133,7 +134,7 @@ class KVTable:
             self._fetch_missing_distributed(spark, files)
         for name, blob_id in files.items():
             if name == _MANIFEST_KEY:
-                local = os.path.join(vdir, "_manifest.json")
+                local = os.path.join(vdir, zonemap.MANIFEST_NAME)
             elif name.startswith(_DELETES_PREFIX):
                 os.makedirs(os.path.join(vdir, "_deletes"), exist_ok=True)
                 local = os.path.join(vdir, "_deletes", name[len(_DELETES_PREFIX):])
@@ -202,7 +203,7 @@ class KVTable:
             p = os.path.join(out_dir, f)
             if f.endswith(".parquet") and os.path.isfile(p):
                 _place(f, p)
-            elif f == "_manifest.json":
+            elif f == zonemap.MANIFEST_NAME:
                 _place(_MANIFEST_KEY, p)
             elif f == "_deletes" and os.path.isdir(p):
                 for df_ in sorted(os.listdir(p)):
@@ -217,8 +218,6 @@ class KVTable:
     def create(self, df: DataFrame, zone_key: "str | None" = None, n_files: int = 8) -> dict:
         """CREATE TABLE: build v0 locally (range-clustered like
         ``sinks.create_table``), upload every part, publish the marker."""
-        from rca_data_tools_spark.sources import sinks
-
         if not self.store.try_claim(0):
             raise RuntimeError("KVTable.create: table already exists in store")
         try:
@@ -226,39 +225,8 @@ class KVTable:
             # a previous FAILED create may have left a partial local build
             # (its claim was released); the retry must start clean
             shutil.rmtree(vdir, ignore_errors=True)
-            # reuse the local create (clustering + manifest), minus its marker
-            out = df
-            if zone_key is not None:
-                out = df.repartitionByRange(n_files, zone_key).sortWithinPartitions(zone_key)
-            out.write.parquet(vdir)
-            if zone_key is not None:
-                names = [
-                    f for f in os.listdir(vdir) if f.endswith(".parquet")
-                ]
-                # footer-first: min/max of the files just written is in
-                # their footers (KB reads, no Spark job — guide §6)
-                footer = sinks._footer_file_stats(
-                    [os.path.join(vdir, n) for n in names], [zone_key]
-                )
-                entries = {}
-                if footer is not None:
-                    for n in names:
-                        mn, mx = footer[os.path.join(vdir, n)][zone_key]
-                        entries[n] = {"mn": mn, "mx": mx}
-                else:
-                    spark = df.sparkSession
-                    back = spark.read.parquet(vdir)
-                    import pyspark.sql.functions as F
-
-                    for r in (
-                        back.groupBy(F.input_file_name().alias("__f"))
-                        .agg(F.min(zone_key).alias("mn"), F.max(zone_key).alias("mx"))
-                        .collect()
-                    ):
-                        entries[os.path.basename(sinks._local_path(r["__f"]))] = {
-                            "mn": r["mn"], "mx": r["mx"],
-                        }
-                sinks._write_manifest(vdir, zone_key, entries)
+            # the local create's clustered write + manifest, minus its marker
+            zonemap.write_zoned(df, vdir, zone_key, n_files)
             stats = self._publish_dir(0, vdir)
         except BaseException:
             # a failed initial write must not leave the store permanently

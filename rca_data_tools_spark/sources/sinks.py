@@ -11,6 +11,12 @@ Engine-side that maps to:
 - a stale-output reconciliation that diffs the previous key listing against
   the freshly produced keys with a left-anti join (S15);
 - a JSON index sink over a file-listing DataFrame (S13).
+
+Beyond the reference: a single-node lakehouse version chain — each version
+a directory of immutable parquet files plus sidecars (deletion vectors,
+bloom index, change feed, metadata), published by an optimistic
+claim/commit protocol. Its zone-map manifest (file pruning) is zonemap.py's:
+this module only tells it which files a new version carries.
 """
 
 from __future__ import annotations
@@ -21,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rca_data_tools_spark.functions.localrel import local_rows_df
+from rca_data_tools_spark.sources import zonemap
 
 
 def write_partitioned(
@@ -607,116 +614,6 @@ def _ensure_out_dir(out_dir: str) -> None:
         os.makedirs(out_dir)
 
 
-MANIFEST_NAME = "_manifest.json"
-
-
-def _read_manifest_doc(target_dir: str) -> "dict | None":
-    import json
-
-    path = os.path.join(target_dir, MANIFEST_NAME)
-    if not os.path.exists(path):
-        return None
-    return json.loads(open(path).read())
-
-
-def _read_manifest(target_dir: str, zone_key: str) -> "dict | None":
-    """The version's persisted zone map for ``zone_key`` ({basename:
-    {mn, mx}}), or None when absent (then the caller scans). The primary
-    ``zone_key`` map answers first; a SECONDARY per-column map
-    (``columns`` — written by OPTIMIZE ZORDER for both clustering
-    dimensions, VERDICT r09 item 5) answers for any other column it
-    covers, so a pruned MERGE keyed on the second Z-order dimension stays
-    metadata-only instead of paying a key-column scan."""
-    doc = _read_manifest_doc(target_dir)
-    if doc is None:
-        return None
-    if doc.get("zone_key") == zone_key:
-        return doc["files"]
-    return doc.get("columns", {}).get(zone_key)
-
-
-def manifest_zone_max(target_dir: str, zone_key: str):
-    """Driver-side MAX(zone_key) of a freshly written version, read from
-    the manifest that write just persisted — zero Spark jobs (guide §1.4:
-    measure on metadata you already have; §6: stats from the format, not a
-    re-scan). Exact by construction: manifest bounds are exact integer
-    footer/scan stats over every row of the version. Returns None when no
-    manifest/bounds exist (empty table, all-NULL key, exotic type) —
-    callers keep their aggregate-job fallback for that case."""
-    m = _read_manifest(target_dir, zone_key)
-    if m is None:
-        return None
-    vals = [e["mx"] for e in m.values() if e.get("mx") is not None]
-    return max(vals) if vals else None
-
-
-def _write_manifest(
-    out_dir: str,
-    zone_key: str,
-    entries: dict,
-    col_entries: "dict[str, dict] | None" = None,
-) -> bool:
-    """Persist the zone map next to the data: the primary ``zone_key`` map
-    plus optional per-column maps ({col: {basename: {mn, mx}}}) for other
-    prunable columns. Zone values that don't JSON-serialize (exotic types)
-    drop that map — the next merge falls back to the scan path, never to
-    wrong pruning."""
-    import json
-
-    body = {"zone_key": zone_key, "files": entries}
-    if col_entries:
-        safe = {}
-        for c, m in col_entries.items():
-            try:
-                json.dumps(m)
-            except TypeError:
-                continue
-            safe[c] = m
-        if safe:
-            body["columns"] = safe
-    try:
-        doc = json.dumps(body)
-    except TypeError:
-        return False
-    with open(os.path.join(out_dir, MANIFEST_NAME), "w") as f:
-        f.write(doc)
-    return True
-
-
-def manifest_candidate_files(
-    table_dir: str, key_col: str, values: list
-) -> "list[str] | None":
-    """Metadata-only file pruning by the persisted zone-map manifest: the
-    data-file basenames whose [mn, mx] range for ``key_col`` could contain
-    ANY of ``values`` — or None when the manifest has no bounds for that
-    column or fails the disk cross-check (then every file is a candidate;
-    staleness costs opens, never answers). NULL-bounded entries (0-row or
-    all-NULL files) can never contain a match and always prune."""
-    doc = _read_manifest_doc(table_dir)
-    if doc is None:
-        return None
-    if doc.get("zone_key") == key_col:
-        m = doc.get("files")
-    else:
-        m = doc.get("columns", {}).get(key_col)
-    if m is None:
-        return None
-    disk = {f for f in os.listdir(table_dir) if f.endswith(".parquet")}
-    if set(m) != disk:
-        return None
-    out = []
-    for name, e in m.items():
-        mn, mx = e.get("mn"), e.get("mx")
-        if mn is None or mx is None:
-            continue
-        try:
-            if any(mn <= v <= mx for v in values):
-                out.append(name)
-        except TypeError:
-            return None  # incomparable types: no pruning, never wrong
-    return sorted(out)
-
-
 def merge_upsert_pruned(
     spark: SparkSession,
     target_dir: str,
@@ -784,7 +681,7 @@ def merge_upsert_pruned(
         source.drop(delete_col) if delete_col is not None else source,
         keys,
     )
-    stats, manifest_used = _zone_file_stats(spark, target_dir, zone_key, schema_ddl)
+    stats, manifest_used = zonemap._zone_file_stats(spark, target_dir, zone_key, schema_ddl)
     dv = read_deletion_vectors(spark, target_dir)
     all_files = sorted(stats)
     # persist the SOURCE: its plan (often an aggregate at sf-scale) is
@@ -831,126 +728,6 @@ def merge_upsert_pruned(
         )
     finally:
         source.unpersist()
-
-
-def _local_path(uri: str) -> str:
-    """``input_file_name``/``_metadata.file_path`` return ``file:`` URIs on
-    a local filesystem; strip back to a plain path (pass-through for real
-    object-store URIs)."""
-    from urllib.parse import unquote, urlparse
-
-    p = urlparse(uri)
-    return unquote(p.path) if p.scheme in ("file", "") else uri
-
-
-def _footer_file_stats(
-    paths: "list[str]", cols: "list[str]"
-) -> "dict | None":
-    """Exact per-file (min, max) for integer-typed columns straight from the
-    parquet FOOTERS — KB metadata reads on the driver, zero data scan, zero
-    Spark jobs (what a real format reads from its manifest instead of
-    re-scanning data it just wrote — guide §6). Returns
-    {path: {col: (mn, mx)}} or None when any file lacks trustworthy stats
-    for any requested column; callers then fall back to the one-pass column
-    scan, so staleness costs a scan, never a wrong bound.
-
-    Integer and string columns only, on purpose: INT32/INT64 footer min/max
-    are exact by spec, and STRING (BYTE_ARRAY/String) row-group stats from
-    parquet-mr/Spark writers are exact at its defaults (stats truncation is
-    disabled — only the separate column index truncates; values past the
-    4 KB stats cap omit min/max entirely, which lands in the scan fallback
-    below). Parquet orders strings by unsigned bytes, the same order
-    Spark's UTF8String comparisons use, so the bounds compare consistently
-    with the scan path. Double stats stay excluded (writers order NaN
-    inconsistently while Spark ranks it greatest). A file whose rows are
-    all NULL in ``col`` reports (None, None) — the same never-a-candidate
-    bound the scan path yields."""
-    try:
-        import pyarrow.parquet as pq
-    except ImportError:
-        return None
-    out: dict = {}
-    for p in paths:
-        try:
-            md = pq.ParquetFile(p).metadata
-        except Exception:
-            return None
-        names = [md.schema.column(i).name for i in range(md.num_columns)]
-        per_col: dict = {}
-        for c in cols:
-            if c not in names:
-                return None
-            i = names.index(c)
-            sc = md.schema.column(i)
-            lt = str(sc.logical_type)
-            if sc.physical_type in ("INT32", "INT64") and (
-                lt == "None" or (lt.startswith("Int(") and "isSigned=true" in lt)
-            ):
-                want = int
-            elif sc.physical_type == "BYTE_ARRAY" and lt == "String":
-                want = str
-            else:
-                return None
-            mn = mx = None
-            for rg in range(md.num_row_groups):
-                cm = md.row_group(rg).column(i)
-                s = cm.statistics
-                if s is None:
-                    return None
-                if not s.has_min_max:
-                    # an all-NULL group legitimately has no bounds; a group
-                    # with live values but no bounds is untrustworthy
-                    if s.null_count is not None and s.null_count == cm.num_values:
-                        continue
-                    return None
-                smn, smx = s.min, s.max
-                if not isinstance(smn, want) or not isinstance(smx, want):
-                    return None
-                mn = smn if mn is None else min(mn, smn)
-                mx = smx if mx is None else max(mx, smx)
-            per_col[c] = (mn, mx)
-        out[p] = per_col
-    return out
-
-
-def _zone_file_stats(
-    spark: SparkSession, target_dir: str, zone_key: str, schema_ddl: str
-) -> "tuple[dict, bool]":
-    """Per-file (min, max) of ``zone_key`` for every data file of a version:
-    read from the persisted MANIFEST when present AND consistent with the
-    directory listing (a data file the manifest doesn't know about — e.g.
-    appended by a plain Spark write — must not silently vanish from the next
-    version, so an inconsistent manifest falls back to the scan path), else
-    one key-column scan. Returns ({path: (mn, mx)}, manifest_used)."""
-    disk_files = sorted(
-        os.path.join(target_dir, f)
-        for f in os.listdir(target_dir)
-        if f.endswith(".parquet")
-    )
-    manifest = _read_manifest(target_dir, zone_key)
-    if manifest is not None and {
-        os.path.join(target_dir, n) for n in manifest
-    } != set(disk_files):
-        manifest = None
-    if manifest is not None:
-        stats = {
-            os.path.join(target_dir, name): (e["mn"], e["mx"])
-            for name, e in manifest.items()
-        }
-        return stats, True
-    # no manifest: parquet footers answer without a data scan (integer zone
-    # keys; anything else falls back to the one-column Spark scan)
-    footer = _footer_file_stats(disk_files, [zone_key])
-    if footer is not None:
-        return {p: footer[p][zone_key] for p in disk_files}, False
-    back = spark.read.schema(schema_ddl).parquet(target_dir)
-    stats = {
-        _local_path(r["__f"]): (r["mn"], r["mx"])
-        for r in back.groupBy(F.input_file_name().alias("__f"))
-        .agg(F.min(zone_key).alias("mn"), F.max(zone_key).alias("mx"))
-        .collect()
-    }
-    return stats, False
 
 
 def _source_matched_files(
@@ -1016,7 +793,7 @@ def _source_matched_files(
     else:
         fdf = cdf.withColumn("__f", F.input_file_name())
     matched = sorted(
-        _local_path(r["__f"])
+        zonemap._local_path(r["__f"])
         for r in fdf.join(F.broadcast(skeys), keys, "left_semi")
         .select("__f")
         .distinct()
@@ -1103,60 +880,13 @@ def _finish_cow_version(
     # shuffle partition would turn each merge into a small-file factory
     # (compact_partitioned exists, but not creating the problem is cheaper)
     merged.coalesce(max(1, len(matched))).write.mode("append").parquet(out_dir)
-    # manifest for the NEW version: carried entries are copied (their files
-    # are byte-identical), new parts pay one batch-sized stats scan.
-    # SECONDARY per-column maps (OPTIMIZE ZORDER's second dimension) carry
-    # the same way when they pass the disk cross-check, and the new parts'
-    # stats for them ride the SAME single scan
-    col_entries: dict = {}
-    prior_doc = _read_manifest_doc(target_dir)
-    if prior_doc is not None:
-        maps = dict(prior_doc.get("columns", {}))
-        zk0 = prior_doc.get("zone_key")
-        if zk0 is not None and zk0 not in maps:
-            maps[zk0] = prior_doc.get("files", {})
-        maps.pop(zone_key, None)  # the primary map covers the merge key
-        disk_names = {os.path.basename(f) for f in all_files}
-        carried_names = set(carried)
-        for c, m in maps.items():
-            if set(m) == disk_names:  # complete (trustworthy) maps only
-                col_entries[c] = {
-                    n: e for n, e in m.items() if n in carried_names
-                }
-    new_parts = [
-        f for f in os.listdir(out_dir)
-        if f.endswith(".parquet") and f not in carried
-    ]
-    if new_parts:
-        # footer-first: the new parts were just written by this very job, so
-        # their min/max is already sitting in their footers — read THAT (KB
-        # metadata, no Spark job) instead of re-scanning bytes we just wrote
-        part_paths = [os.path.join(out_dir, f) for f in new_parts]
-        footer = _footer_file_stats(
-            part_paths, [zone_key, *col_entries]
-        )
-        if footer is not None:
-            for p in part_paths:
-                name = os.path.basename(p)
-                mn, mx = footer[p][zone_key]
-                carried[name] = {"mn": mn, "mx": mx}
-                for c in col_entries:
-                    cmn, cmx = footer[p][c]
-                    col_entries[c][name] = {"mn": cmn, "mx": cmx}
-        else:
-            ndf = spark.read.schema(schema_ddl).parquet(*part_paths)
-            col_entries = {c: m for c, m in col_entries.items() if c in ndf.columns}
-            aggs = [F.min(zone_key).alias("mn"), F.max(zone_key).alias("mx")]
-            for c in col_entries:
-                aggs += [F.min(c).alias(f"mn__{c}"), F.max(c).alias(f"mx__{c}")]
-            for r in (
-                ndf.groupBy(F.input_file_name().alias("__f")).agg(*aggs).collect()
-            ):
-                name = os.path.basename(_local_path(r["__f"]))
-                carried[name] = {"mn": r["mn"], "mx": r["mx"]}
-                for c in col_entries:
-                    col_entries[c][name] = {"mn": r[f"mn__{c}"], "mx": r[f"mx__{c}"]}
-    _write_manifest(out_dir, zone_key, carried, col_entries or None)
+    # manifest for the NEW version: carried (byte-identical) files keep
+    # their entries, the secondary maps included; the new parts' stats for
+    # every map come from one footer read or batch-sized scan
+    zonemap.build_manifest(
+        spark, out_dir, zone_key, target_dir, set(carried), schema_ddl,
+        bounds=carried,
+    )
     return {
         "files_total": len(all_files),
         "files_candidates": n_candidates,
@@ -1211,7 +941,7 @@ def merge_full_pruned(
         [c for c in probe.columns if c not in keys],
         nmbs_update_set, nmbs_update_cond,
     )
-    stats, manifest_used = _zone_file_stats(spark, target_dir, zone_key, schema_ddl)
+    stats, manifest_used = zonemap._zone_file_stats(spark, target_dir, zone_key, schema_ddl)
     dv = read_deletion_vectors(spark, target_dir)
     all_files = sorted(stats)
     # same reuse argument as merge_upsert_pruned: the source plan feeds the
@@ -1253,7 +983,7 @@ def merge_full_pruned(
                     "left_anti",
                 )
             nmbs_files = sorted(
-                _local_path(r["__f"])
+                zonemap._local_path(r["__f"])
                 for r in keyed.filter("__hit").select("__f").distinct().collect()
             )
         matched = sorted(set(key_matched) | set(nmbs_files))
@@ -1809,8 +1539,7 @@ def alter_table_drop_column(
         live = {
             log_of.get(p, p): p for p in physical_cols if p not in already
         }
-        doc = _read_manifest_doc(base_dir)
-        zone_physical = doc.get("zone_key") if doc else None
+        zone_physical = zonemap.zone_key_of(base_dir)
         rules = table_constraints(table_root)
         phys_drop = []
         for c in cols:
@@ -1937,39 +1666,6 @@ def merge_table_logical(
     )
 
 
-def manifest_range_files(
-    table_dir: str, col: str, lo, hi
-) -> "list[str] | None":
-    """Metadata-only pruning for a RANGE predicate ``col BETWEEN lo AND
-    hi``: the data-file basenames whose manifest [mn, mx] intersects the
-    range — None when the manifest has no bounds for the column or fails
-    the disk cross-check (every file is then a candidate)."""
-    doc = _read_manifest_doc(table_dir)
-    if doc is None:
-        return None
-    m = (
-        doc.get("files")
-        if doc.get("zone_key") == col
-        else doc.get("columns", {}).get(col)
-    )
-    if m is None:
-        return None
-    disk = {f for f in os.listdir(table_dir) if f.endswith(".parquet")}
-    if set(m) != disk:
-        return None
-    out = []
-    for name, e in m.items():
-        mn, mx = e.get("mn"), e.get("mx")
-        if mn is None or mx is None:
-            continue  # 0-row / all-NULL file: can never match
-        try:
-            if not (mx < lo or mn > hi):
-                out.append(name)
-        except TypeError:
-            return None  # incomparable types: no pruning, never wrong
-    return sorted(out)
-
-
 def range_scan(
     spark: SparkSession,
     table_dir: str,
@@ -1989,7 +1685,9 @@ def range_scan(
     data_files = sorted(
         f for f in os.listdir(table_dir) if f.endswith(".parquet")
     )
-    cands = manifest_range_files(table_dir, col, lo, hi)
+    cands = zonemap.prune_files(
+        table_dir, col, lambda mn, mx: not (mx < lo or mn > hi)
+    )
     if cands is None:
         cands = data_files
     stats = {"files_total": len(data_files), "files_scanned": len(cands)}
@@ -2030,41 +1728,7 @@ def create_table(
 
         df = check_constraints(df, constraints)
     v0 = os.path.join(table_root, "v0")
-    out = df
-    if zone_key is not None:
-        out = df.repartitionByRange(n_files, zone_key).sortWithinPartitions(zone_key)
-    out.write.parquet(v0)
-    if zone_key is not None:
-        spark = df.sparkSession
-        # the manifest is built directly from the fresh files (v0 has no
-        # predecessor to carry entries from)
-        names = [f for f in os.listdir(v0) if f.endswith(".parquet")]
-        entries = {n: {"mn": None, "mx": None} for n in names}
-        if zone_key in df.columns:
-            # footer-first (guide §6): the freshly written files' min/max is
-            # in their footers — KB metadata reads instead of a full re-scan
-            footer = _footer_file_stats(
-                [os.path.join(v0, n) for n in names], [zone_key]
-            )
-            if footer is not None:
-                for n in names:
-                    mn, mx = footer[os.path.join(v0, n)][zone_key]
-                    entries[n] = {"mn": mn, "mx": mx}
-            else:
-                from urllib.parse import unquote, urlparse
-
-                ndf = spark.read.parquet(v0)
-                for r in (
-                    ndf.groupBy(F.input_file_name().alias("__f"))
-                    .agg(F.min(zone_key).alias("mn"), F.max(zone_key).alias("mx"))
-                    .collect()
-                ):
-                    p = urlparse(r["__f"])
-                    nm = os.path.basename(
-                        unquote(p.path) if p.scheme in ("file", "") else r["__f"]
-                    )
-                    entries[nm] = {"mn": r["mn"], "mx": r["mx"]}
-            _write_manifest(v0, zone_key, entries)
+    zonemap.write_zoned(df, v0, zone_key, n_files)
     # v0 carries its OWN metadata doc from birth (possibly empty), so the
     # chain is fully versioned: a later ALTER at v5 cannot retroactively
     # change what a time-travel read of v0-v4 resolves (VERDICT r10 item 4)
@@ -2498,10 +2162,7 @@ def _link_version_content(src: str, out_dir: str) -> int:
                     os.link(
                         os.path.join(sdir, f), os.path.join(out_dir, side, f)
                     )
-    if os.path.exists(os.path.join(src, MANIFEST_NAME)):
-        os.link(
-            os.path.join(src, MANIFEST_NAME), os.path.join(out_dir, MANIFEST_NAME)
-        )
+    zonemap.link_manifest(src, out_dir)
     return n
 
 
@@ -2728,7 +2389,8 @@ def optimize_table(
     range of BOTH dimensions and parquet footer min/max prunes filters on
     either — the periodic re-cluster a maintained table runs after enough
     merges have scattered its layout. Costs the same one shuffle the plain
-    rewrite pays (repartitionByRange instead of round-robin).
+    rewrite pays (by file id, cut at exact z-key quantiles, instead of
+    round-robin) plus one pass for the z-key histogram.
 
     Returns {"files_before", "files_after", "bytes", "version",
     "attempts"}."""
@@ -2774,11 +2436,38 @@ def optimize_table(
                            F.lit(int(bounds["bhi"])), 8),
                     8,
                 )
+                z = df.withColumn("__zkey", zk)
+                # cut the z-curve at exact quantiles of its histogram (at
+                # most 2^16 keys) instead of repartitionByRange: Spark seeds
+                # the range sample with the RDD id, so the layout would
+                # depend on what the session ran before
+                hist = sorted(
+                    (r["__zkey"], r["count"])
+                    for r in z.groupBy("__zkey").count().collect()
+                    if r["__zkey"] is not None
+                )
+                total = sum(c for _, c in hist)
+                cuts: list = []
+                seen = 0
+                for key, c in hist:
+                    seen += c
+                    if len(cuts) < n_files - 1 and seen * n_files >= total * (len(cuts) + 1):
+                        cuts.append(key)
+
+                def _part(lo: int, hi: int):
+                    # binary search: file i holds keys in (cuts[i-1], cuts[i]]
+                    if lo == hi:
+                        return F.lit(lo)
+                    mid = (lo + hi) // 2
+                    return F.when(F.col("__zkey") <= cuts[mid], _part(lo, mid)).otherwise(
+                        _part(mid + 1, hi)
+                    )
+
                 (
-                    df.withColumn("__zkey", zk)
-                    .repartitionByRange(n_files, "__zkey")
+                    z.withColumn("__part", _part(0, len(cuts)))
+                    .repartitionById(len(cuts) + 1, "__part")
                     .sortWithinPartitions("__zkey")
-                    .drop("__zkey")
+                    .drop("__zkey", "__part")
                     .write.mode("append")
                     .parquet(out_dir)
                 )
@@ -2795,8 +2484,11 @@ def optimize_table(
         # records BOTH clustering dimensions as secondary column maps, so
         # the second dimension is metadata-prunable too (not just
         # footer-readable)
-        _extend_manifest(
-            spark, base_dir, out_dir, None, set(), extra_cols=zorder_cols
+        zone_key = zonemap.zone_key_of(base_dir)
+        if zone_key is None and zorder_cols:
+            zone_key = zorder_cols[0]
+        zonemap.build_manifest(
+            spark, out_dir, zone_key, base_dir, cols=zorder_cols or ()
         )
         return {
             "files_before": len(files),
@@ -2892,90 +2584,15 @@ def update_where(
     # (byte-identical; vectored rows only ever over-approximate the range),
     # new image parts pay one batch-sized stats scan — without this the
     # next pruned merge would fall back to a full key-column scan
-    _extend_manifest(spark, target_dir, out_dir, schema_ddl, set(data_files))
+    zonemap.build_manifest(
+        spark, out_dir, zonemap.zone_key_of(target_dir), target_dir,
+        set(data_files), schema_ddl,
+    )
     return {
         "files_total": len(data_files),
         "files_rewritten": 0,
         "rows_updated": int(total_n - prior_n),
     }
-
-
-def _extend_manifest(
-    spark: SparkSession,
-    target_dir: str,
-    out_dir: str,
-    schema_ddl: "str | None",
-    carried_names: "set[str]",
-    extra_cols: "list[str] | None" = None,
-) -> None:
-    """Carry the previous version's zone-map manifest — primary map AND
-    secondary per-column maps — into ``out_dir`` and add entries for any
-    NEW parquet parts (one stats scan of just those files, all columns
-    aggregated together). ``extra_cols`` adds columns to the secondary
-    maps (OPTIMIZE ZORDER passes its two clustering dimensions so BOTH are
-    metadata-prunable afterwards — VERDICT r09 item 5); with no prior
-    manifest and no extra_cols the function quietly skips (the next merge
-    scans; correctness never depends on the manifest)."""
-    from urllib.parse import unquote, urlparse
-
-    doc = _read_manifest_doc(target_dir)
-    if doc is None and not extra_cols:
-        return
-    zone_key = doc.get("zone_key") if doc is not None else extra_cols[0]
-    entries = (
-        {n: e for n, e in doc["files"].items() if n in carried_names}
-        if doc is not None
-        else {}
-    )
-    col_maps = {
-        c: {n: e for n, e in m.items() if n in carried_names}
-        for c, m in (doc.get("columns", {}) if doc is not None else {}).items()
-    }
-    for c in extra_cols or []:
-        if c != zone_key:
-            col_maps.setdefault(c, {})
-    new_parts = [
-        f for f in os.listdir(out_dir)
-        if f.endswith(".parquet") and f not in carried_names
-    ]
-    if new_parts:
-        part_paths = [os.path.join(out_dir, f) for f in new_parts]
-        # footer-first (guide §6): stats of parts this chain just wrote come
-        # from their own footers when the columns are integer-typed — no job
-        footer = _footer_file_stats(part_paths, [zone_key, *col_maps])
-        if footer is not None:
-            for f, p in zip(new_parts, part_paths):
-                mn, mx = footer[p][zone_key]
-                entries[f] = {"mn": mn, "mx": mx}
-                for c in col_maps:
-                    cmn, cmx = footer[p][c]
-                    col_maps[c][f] = {"mn": cmn, "mx": cmx}
-            _write_manifest(out_dir, zone_key, entries, col_maps or None)
-            return
-        reader = spark.read if schema_ddl is None else spark.read.schema(schema_ddl)
-        ndf = reader.parquet(*part_paths)
-        if zone_key not in ndf.columns:
-            return
-        col_maps = {c: m for c, m in col_maps.items() if c in ndf.columns}
-        # pre-seed EVERY new part: a 0-row part yields no stats group, and a
-        # name missing from the manifest would trip the cross-check; NULL
-        # bounds make it a never-candidate (nothing to match in 0 rows)
-        for f in new_parts:
-            entries[f] = {"mn": None, "mx": None}
-            for m in col_maps.values():
-                m[f] = {"mn": None, "mx": None}
-        aggs = [F.min(zone_key).alias("mn"), F.max(zone_key).alias("mx")]
-        for c in col_maps:
-            aggs += [F.min(c).alias(f"mn__{c}"), F.max(c).alias(f"mx__{c}")]
-        for r in (
-            ndf.groupBy(F.input_file_name().alias("__f")).agg(*aggs).collect()
-        ):
-            p = urlparse(r["__f"])
-            name = os.path.basename(unquote(p.path) if p.scheme in ("file", "") else r["__f"])
-            entries[name] = {"mn": r["mn"], "mx": r["mx"]}
-            for c in col_maps:
-                col_maps[c][name] = {"mn": r[f"mn__{c}"], "mx": r[f"mx__{c}"]}
-    _write_manifest(out_dir, zone_key, entries, col_maps or None)
 
 
 def table_history(spark: SparkSession, table_root: str) -> DataFrame:
@@ -3185,11 +2802,7 @@ def delete_where(
     # manifest and bloom index (if any) carry over untouched: deletes change
     # no file bytes (a vectored row's set bits over-approximate — one-sided,
     # so still correct)
-    if os.path.exists(os.path.join(target_dir, MANIFEST_NAME)):
-        os.link(
-            os.path.join(target_dir, MANIFEST_NAME),
-            os.path.join(out_dir, MANIFEST_NAME),
-        )
+    zonemap.link_manifest(target_dir, out_dir)
     _carry_bloom_links(target_dir, out_dir)
     return {
         "files_total": len(data_files),

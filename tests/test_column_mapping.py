@@ -156,6 +156,19 @@ def test_drop_column_refusals(spark):
     assert committed_versions(root)[-1] == tip
 
 
+def test_drop_column_keeps_the_table_metadata(spark):
+    """The drop version's metadata is its predecessor's plus the drop: the
+    table's CHECK constraints stay in force."""
+    from rca_data_tools_spark.sources.sinks import (
+        alter_table_drop_column, dropped_columns, table_constraints,
+    )
+
+    root, _ = _mk(spark, constraints={"v_nonneg": "v >= 0"})
+    alter_table_drop_column(root, ["u"], DDL)
+    assert dropped_columns(root) == ["u"]
+    assert table_constraints(root) == {"v_nonneg": "v >= 0"}
+
+
 def test_drop_column_merge_null_fills_dead_slot(spark):
     from rca_data_tools_spark.sources.sinks import alter_table_drop_column
 

@@ -470,8 +470,10 @@ def test_zorder_manifest_carries_both_dimensions(spark, tmp_path):
 
     from rca_data_tools_spark.sources.bloom_index import point_lookup
     from rca_data_tools_spark.sources.sinks import (
-        MANIFEST_NAME, manifest_candidate_files, merge_into_table,
-        optimize_table,
+        merge_into_table, optimize_table,
+    )
+    from rca_data_tools_spark.sources.zonemap import (
+        MANIFEST_NAME, manifest_candidate_files,
     )
 
     ddl = "k bigint, grp string, val double"

@@ -360,10 +360,10 @@ def test_merge_manifest_prunes_without_scanning(spark, tmp_path):
     import os
 
     from rca_data_tools_spark.sources.sinks import (
-        MANIFEST_NAME,
         merge_upsert,
         merge_upsert_pruned,
     )
+    from rca_data_tools_spark.sources.zonemap import MANIFEST_NAME
 
     ddl = "id long, v double"
     v0 = str(tmp_path / "v0")
@@ -859,9 +859,10 @@ def test_manifest_survives_update_and_optimize(spark, tmp_path):
     import os
 
     from rca_data_tools_spark.sources.sinks import (
-        _read_manifest, mark_committed, merge_into_table, optimize_table,
+        mark_committed, merge_into_table, optimize_table,
         update_into_table,
     )
+    from rca_data_tools_spark.sources.zonemap import _read_manifest
 
     ddl = "id long, v double"
     root = str(tmp_path / "t")
@@ -945,8 +946,9 @@ def test_create_table_and_persisted_change_feed(spark, tmp_path):
     import pytest as _pytest
 
     from rca_data_tools_spark.sources.sinks import (
-        _read_manifest, create_table, merge_into_table, read_changes,
+        create_table, merge_into_table, read_changes,
     )
+    from rca_data_tools_spark.sources.zonemap import _read_manifest
 
     ddl = "id long, v double"
     root = str(tmp_path / "t")
@@ -1095,7 +1097,7 @@ def test_footer_stats_string_zone_key_matches_scan(spark, tmp_path):
     footers byte-for-byte like the one-column scan fallback (r12: the
     footer path accepts BYTE_ARRAY/String — before, every merge against a
     string-zoned version without a manifest paid a full scan job)."""
-    from rca_data_tools_spark.sources.sinks import (
+    from rca_data_tools_spark.sources.zonemap import (
         _footer_file_stats, _zone_file_stats,
     )
     import os
@@ -1118,7 +1120,7 @@ def test_footer_stats_string_zone_key_matches_scan(spark, tmp_path):
         .agg(F.min("d").alias("mn"), F.max("d").alias("mx"))
         .collect()
     }
-    from rca_data_tools_spark.sources.sinks import _local_path
+    from rca_data_tools_spark.sources.zonemap import _local_path
 
     scan = {_local_path(k): v for k, v in scan.items()}
     assert {p: footer[p]["d"] for p in paths} == scan
