@@ -3127,13 +3127,13 @@ def sink_merge_full_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     ddl = "event_id bigint, user_id bigint, value double"
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     root = tempfile.mkdtemp(prefix="rca_mergefull_")
-    create_table(e, root, zone_key="event_id", n_files=8)
+    v0 = create_table(e, root, zone_key="event_id", n_files=8)
     # MAX(event_id) from the manifest the create just wrote — zero Spark
     # jobs (zonemap.manifest_zone_max; exact integer footer stats). Fallback
     # aggregate keeps the empty-corpus contract: MAX of zero rows is NULL
     # -> m=0 keeps every derived filter well-typed (and matching the
     # oracle, whose joins/filters are all vacuous on empty tables)
-    _m = manifest_zone_max(root, "event_id")
+    _m = manifest_zone_max(v0, "event_id")
     if _m is None:
         _m = e.agg(F.max("event_id")).first()[0]
     m = int(_m) if _m is not None else 0
@@ -3340,13 +3340,13 @@ def sink_merge_full_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ddl = "event_id bigint, user_id bigint, value double"
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     root = tempfile.mkdtemp(prefix="rca_mfcdf_")
-    create_table(e, root, zone_key="event_id", n_files=8)
+    v0 = create_table(e, root, zone_key="event_id", n_files=8)
     # MAX(event_id) from the manifest the create just wrote — zero Spark
     # jobs (zonemap.manifest_zone_max; exact integer footer stats). Fallback
     # aggregate keeps the empty-corpus contract: MAX of zero rows is NULL
     # -> m=0 keeps every derived filter well-typed (and matching the
     # oracle, whose joins/filters are all vacuous on empty tables)
-    _m = manifest_zone_max(root, "event_id")
+    _m = manifest_zone_max(v0, "event_id")
     if _m is None:
         _m = e.agg(F.max("event_id")).first()[0]
     m = int(_m) if _m is not None else 0
@@ -3514,13 +3514,13 @@ def sink_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ddl = "event_id bigint, user_id bigint, value double"
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     root = tempfile.mkdtemp(prefix="rca_colmap_")
-    create_table(e, root, zone_key="event_id", n_files=8)
+    v0 = create_table(e, root, zone_key="event_id", n_files=8)
     # MAX(event_id) from the manifest the create just wrote — zero Spark
     # jobs (zonemap.manifest_zone_max; exact integer footer stats). Fallback
     # aggregate keeps the empty-corpus contract: MAX of zero rows is NULL
     # -> m=0 keeps every derived filter well-typed (and matching the
     # oracle, whose joins/filters are all vacuous on empty tables)
-    _m = manifest_zone_max(root, "event_id")
+    _m = manifest_zone_max(v0, "event_id")
     if _m is None:
         _m = e.agg(F.max("event_id")).first()[0]
     m = int(_m) if _m is not None else 0
@@ -3619,13 +3619,13 @@ def sink_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
     ddl = "event_id bigint, user_id bigint, value double"
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     root = tempfile.mkdtemp(prefix="rca_dropcol_")
-    create_table(e, root, zone_key="event_id", n_files=8)
+    v0 = create_table(e, root, zone_key="event_id", n_files=8)
     # MAX(event_id) from the manifest the create just wrote — zero Spark
     # jobs (zonemap.manifest_zone_max; exact integer footer stats). Fallback
     # aggregate keeps the empty-corpus contract: MAX of zero rows is NULL
     # -> m=0 keeps every derived filter well-typed (and matching the
     # oracle, whose joins/filters are all vacuous on empty tables)
-    _m = manifest_zone_max(root, "event_id")
+    _m = manifest_zone_max(v0, "event_id")
     if _m is None:
         _m = e.agg(F.max("event_id")).first()[0]
     m = int(_m) if _m is not None else 0
@@ -4003,10 +4003,10 @@ def sink_changes_logical(spark: SparkSession, sf_dir: str) -> DataFrame:
     ddl = "event_id bigint, user_id bigint, value double"
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     root = tempfile.mkdtemp(prefix="rca_cdflog_")
-    create_table(e, root, zone_key="event_id", n_files=8)
+    v0 = create_table(e, root, zone_key="event_id", n_files=8)
     # MAX(event_id) from the manifest the create just wrote (zero Spark
     # jobs); aggregate fallback keeps the empty-corpus contract
-    _m = manifest_zone_max(root, "event_id")
+    _m = manifest_zone_max(v0, "event_id")
     if _m is None:
         _m = e.agg(F.max("event_id")).first()[0]
     m = int(_m) if _m is not None else 0
